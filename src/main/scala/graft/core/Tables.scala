@@ -111,11 +111,6 @@ final case class Tables(spark: SparkSession, dir: String) {
     */
   private def balancedByKey(name: String, key: String): DataFrame = {
     val df = t(name)
-    // SPARK_GRAFT_SCAN_REBALANCE=off is the A/B kill switch: it
-    // reproduces the pre-round-17 plans exactly (used for the committed
-    // before/after plan dumps and for isolating the rebalance in perf
-    // triage).
-    if (sys.env.get("SPARK_GRAFT_SCAN_REBALANCE").contains("off")) return df
     val par = spark.sparkContext.defaultParallelism
     // numPartitions passed EXPLICITLY: a bare repartition(col) is
     // AQE-optimizable and the advisory size (64 MB) coalesces a small

@@ -217,7 +217,7 @@ object PricePipeline {
                 sc.setLocalProperty("spark.scheduler.pool", s"graft_fit_$n")
                 try {
                   val t0 = System.nanoTime()
-                  // round-18: FMRegressor is the table's compute whale —
+                  // FMRegressor is the table's compute whale —
                   // minibatch GD runs ~100 full gradient passes over the
                   // train split, so its cost is compute × passes, unlike
                   // the scheduling-bound L-BFGS/tree fits the shared
@@ -232,12 +232,9 @@ object PricePipeline {
                   // grains ≥ cores (sf1 and up) the condition is false
                   // and nothing changes. Gradient accumulation order
                   // shifts with partitioning; the gate's verdict booleans
-                  // are partition-independent (oracle re-proved).
-                  // SPARK_GRAFT_FM_REGRAIN=off is the A/B kill switch.
+                  // are partition-independent (PricePipelineRegrainSpec).
                   val par = sc.defaultParallelism
-                  val regrain = n == "FMRegressor" &&
-                    !sys.env.get("SPARK_GRAFT_FM_REGRAIN").contains("off") &&
-                    train.rdd.getNumPartitions < par
+                  val regrain = n == "FMRegressor" && train.rdd.getNumPartitions < par
                   val fitTrain =
                     if (regrain) train.repartition(par).persist() else train
                   val row =

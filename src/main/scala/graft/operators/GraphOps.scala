@@ -1,6 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration._
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 
 /** Small-graph primitives needed by the dedup pipeline. Spark has no
@@ -11,43 +15,38 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Round-17 landed the convergence scalars on the eager checkpoint via
-    * `observe()` (one driver-synchronized job per round instead of two);
-    * round-18 A/Bs that fusion per the verdict. `SPARK_GRAFT_GRAPH_OBSERVE=off`
-    * pins the pre-fusion path — scalar computed by a SEPARATE aggregate
-    * action after the checkpoint — reproducing the round-16 job structure
-    * exactly (the kill switch for plan dumps and perf triage).
+  /** The observed metrics row, with the wait BOUNDED: `Observation.get`
+    * blocks on the listener bus delivering the metrics event, so a
+    * dropped event (bus overload) would hang the driver where a separate
+    * `count()` action could not. If the wait times out or fails in any
+    * other non-fatal way, the scalar is recomputed with `fallback` — an
+    * explicit aggregate over the already-checkpointed frame, whose
+    * lineage is truncated, so the fallback is one cheap job over
+    * materialized rows and is value-identical (same aggregates over the
+    * same rows). Every fallback prints one `[graft-fallback]` line on
+    * stderr naming the observation and the cause.
     */
-  private def observeFusion: Boolean =
-    !sys.env.get("SPARK_GRAFT_GRAPH_OBSERVE").contains("off")
+  private[operators] def observedRow(name: String,
+                                     metrics: Future[Row],
+                                     fallback: => Row): Row =
+    try Await.result(metrics, 60.seconds)
+    catch {
+      case NonFatal(e) =>
+        System.err.println(s"[graft-fallback] observe $name: $e; recomputing the aggregate")
+        fallback
+    }
 
-  /** Round-18 per-round plan fusions (guide §2.4 "remove shuffles
-    * outright", verdict item 3): fewer exchanges per driver-synchronized
-    * round in the three iterative loops, with the per-round edge/label
-    * SETS — and therefore the convergence scalars, the round counts and
-    * the output — provably unchanged (see each site's comment).
-    * `SPARK_GRAFT_GRAPH_FUSE=off` pins the round-17 shapes (the A/B kill
-    * switch for plan dumps and perf triage).
+  /** Checkpoints `df` eagerly with `metrics` computed in the same job via
+    * `observe()`, and returns the checkpoint plus the metrics row — one
+    * driver-synchronized job where a separate aggregate action would
+    * make two.
     */
-  private def roundFusion: Boolean =
-    !sys.env.get("SPARK_GRAFT_GRAPH_FUSE").contains("off")
-
-  /** The observed metrics row, with the wait BOUNDED (round-18 advice):
-    * `Observation.get` blocks on the listener bus delivering the metrics
-    * event, so a dropped event (bus overload) would hang the driver where
-    * the old separate `count()` action could not. After 60 s the scalar
-    * is recomputed with `fallback` — an explicit aggregate over the
-    * already-checkpointed frame, whose lineage is truncated, so the
-    * fallback is one cheap job over materialized rows and is value-
-    * identical (same aggregates over the same rows).
-    */
-  private def observedRow(obs: org.apache.spark.sql.Observation,
-                          fallback: => org.apache.spark.sql.Row)
-      : org.apache.spark.sql.Row =
-    try {
-      import scala.concurrent.duration._
-      scala.concurrent.Await.result(obs.future, 60.seconds)
-    } catch { case _: java.util.concurrent.TimeoutException => fallback }
+  private def checkpointObserved(df: DataFrame, name: String,
+                                 metrics: Column*): (DataFrame, Row) = {
+    val obs = Observation(name)
+    val out = df.observe(obs, metrics.head, metrics.tail: _*).localCheckpoint(true)
+    (out, observedRow(name, obs.future, out.agg(metrics.head, metrics.tail: _*).head()))
+  }
 
   /** Connected components by min-label propagation.
     *
@@ -116,60 +115,32 @@ object GraphOps {
     var rounds   = 0
     var stagnant = false
     while (changed > 0 && !stagnant && rounds < maxRounds) {
-      // the changed-label count rides the checkpoint job via observe()
-      // (round-17, same rationale as the star-contraction checksum): the
-      // separate filter().count() action per round doubled the loop's
-      // synchronized job count for the same scalar. Wait bounded +
-      // SPARK_GRAFT_GRAPH_OBSERVE=off kill switch — see observedRow /
-      // observeFusion.
-      val changedExpr = coalesce(sum(
-        when(col("label") < col("old_label"), 1L).otherwise(0L)), lit(0L))
-        .as("changed")
-      // round-18 fusion (verdict item 3, guide §2.4): the round-17 body
-      // was join → agg → LEFT JOIN back to labels (the re-attach of each
-      // node's own label). Unioning the self-labels INTO the aggregate
-      // removes that second join: per id, min(label) over {own label} ∪
+      // the changed-label count rides the checkpoint job via observe(),
+      // so each round is one driver-synchronized job (see
+      // checkpointObserved). The round body is one join + one aggregate:
+      // unioning the self-labels INTO the aggregate replaces a second
+      // join back to labels — per id, min(label) over {own label} ∪
       // {neighbour labels} is exactly least(own, nmin), and old_label
       // rides the self branch (null on neighbour rows; min over one
       // non-null recovers it — every node HAS a self row, so it is never
-      // null). Same values, one join + one aggregate per round.
-      val next =
-        if (roundFusion) {
-          val self = labels.select(col("id"), col("label"),
-            col("label").as("old_label"))
-          val neighbor = edges
-            .join(labels, edges("dst") === labels("id"))
-            .select(edges("src").as("id"), col("label"),
-              lit(null).cast(labels.schema("label").dataType).as("old_label"))
-          self.union(neighbor)
-            .groupBy("id")
-            .agg(min("label").as("label"), min("old_label").as("old_label"))
-            .select(col("id"), col("old_label"), col("label"))
-        } else {
-          val neighborMin = edges
-            .join(labels, edges("dst") === labels("id"))
-            .groupBy(edges("src"))
-            .agg(min("label").as("nmin"))
-          labels
-            .join(neighborMin, labels("id") === neighborMin("src"), "left")
-            .select(
-              col("id"),
-              col("label").as("old_label"),
-              least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
-        }
-      val (updated, changedNow) =
-        if (observeFusion) {
-          val obs = org.apache.spark.sql.Observation(s"graft_cc_changed_$rounds")
-          val out = next.observe(obs, changedExpr).localCheckpoint(true)
-          (out, observedRow(obs, out.agg(changedExpr).head())
-            .getAs[Long]("changed"))
-        } else {
-          val out = next.localCheckpoint(true)
-          (out, out.agg(changedExpr).head().getAs[Long]("changed"))
-        }
+      // null).
+      val changedExpr = coalesce(sum(
+        when(col("label") < col("old_label"), 1L).otherwise(0L)), lit(0L))
+        .as("changed")
+      val self = labels.select(col("id"), col("label"),
+        col("label").as("old_label"))
+      val neighbor = edges
+        .join(labels, edges("dst") === labels("id"))
+        .select(edges("src").as("id"), col("label"),
+          lit(null).cast(labels.schema("label").dataType).as("old_label"))
+      val next = self.union(neighbor)
+        .groupBy("id")
+        .agg(min("label").as("label"), min("old_label").as("old_label"))
+        .select(col("id"), col("old_label"), col("label"))
+      val (updated, m) = checkpointObserved(next, s"graft_cc_changed_$rounds", changedExpr)
       changed2 = prev
       prev = changed
-      changed = changedNow
+      changed = m.getAs[Long]("changed")
       labels = updated.select("id", "label")
       rounds += 1
       // not halving every two rounds after the optimistic window ⇒ a
@@ -211,27 +182,15 @@ object GraphOps {
       .distinct()
       .localCheckpoint(true)
 
-    // convergence scalars ride the checkpoint job via observe()
-    // (round-17): the loop is driver-latency-bound on a small edge list,
-    // and a separate checksum action per round doubled the synchronized
-    // job count. CollectMetrics evaluates during the eager checkpoint's
-    // own pass, so each round is ONE job; the checkpointed frame's
-    // lineage is already truncated past the metrics node, so downstream
-    // consumers never re-fire it. Metric values are identical to the
-    // old separate aggregate (count + hash-sum over the same rows).
+    // convergence scalars ride the checkpoint job via observe(): the
+    // loop is driver-latency-bound on a small edge list, so each round is
+    // ONE job. The checkpointed frame's lineage is already truncated past
+    // the metrics node, so downstream consumers never re-fire it.
     def checkpointWithSig(e: DataFrame, round: Int): (DataFrame, (Long, Long)) = {
-      val nExpr = count(lit(1)).as("n")
-      val hExpr = coalesce(sum(xxhash64(col("src"), col("dst"))), lit(0L)).as("h")
-      if (observeFusion) {
-        val obs = org.apache.spark.sql.Observation(s"graft_cc_sig_$round")
-        val out = e.observe(obs, nExpr, hExpr).localCheckpoint(true)
-        val m = observedRow(obs, out.agg(nExpr, hExpr).head())
-        (out, (m.getAs[Long]("n"), m.getAs[Long]("h")))
-      } else {
-        val out = e.localCheckpoint(true)
-        val m = out.agg(nExpr, hExpr).head()
-        (out, (m.getAs[Long]("n"), m.getAs[Long]("h")))
-      }
+      val (out, m) = checkpointObserved(e, s"graft_cc_sig_$round",
+        count(lit(1)).as("n"),
+        coalesce(sum(xxhash64(col("src"), col("dst"))), lit(0L)).as("h"))
+      (out, (m.getAs[Long]("n"), m.getAs[Long]("h")))
     }
 
     var (edges, sig) = checkpointWithSig(p0.distinct(), 0)
@@ -264,7 +223,7 @@ object GraphOps {
       .join(mins, "src")
       .select(col("dst").as("src"), col("m").as("dst"))
       .filter(col("src") =!= col("dst"))
-    // round-18 fusion: the intermediate dedup is redundant — every round
+    // no distinct() here: every round
     // ends in smallStar's distinct(), whose output SET (and thus the
     // convergence signature and the final star map) is identical with or
     // without it: min/groupBy/union-distinct are multiset-insensitive.
@@ -275,7 +234,7 @@ object GraphOps {
     // removes one full edge-list exchange per contraction round for a
     // bounded extra row count into smallStar's aggregate, which dedups
     // anyway.
-    if (roundFusion) attached else attached.distinct()
+    attached
   }
 
   /** Small-star: every node attaches its smaller-or-equal neighbours (and
@@ -422,17 +381,15 @@ object GraphOps {
     */
   def triangleStats(t: graft.core.Tables, cap: Int = 10): DataFrame = {
     val edges = coActivityEdges(t, cap).localCheckpoint(true)
-    // round-18: deg is no longer eagerly checkpointed — it is ONE cheap
-    // aggregate over the already-checkpointed edge list, and its three
-    // consumers sit in two jobs (the `oriented` checkpoint job, where the
-    // u- and v-side copies dedup via ReuseExchange, and the final
-    // aggregate job). Recomputing the agg there costs one extra stage per
-    // job; the eager checkpoint cost a whole extra driver-synchronized
-    // job. SPARK_GRAFT_GRAPH_FUSE=off pins the round-17 shape.
-    val degPlain = edges.select(col("u").as("id"))
+    // deg is not checkpointed: it is ONE cheap aggregate over the
+    // already-checkpointed edge list, and its three consumers sit in two
+    // jobs (the `oriented` checkpoint job, where the u- and v-side copies
+    // dedup via ReuseExchange, and the final aggregate job). Recomputing
+    // the agg there costs one extra stage per job; an eager checkpoint
+    // would cost a whole extra driver-synchronized job.
+    val deg = edges.select(col("u").as("id"))
       .union(edges.select(col("v").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
-    val deg = if (roundFusion) degPlain else degPlain.localCheckpoint(true)
     val withDeg = edges
       .join(deg.select(col("id").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("id").as("v"), col("deg").as("dv")), "v")

@@ -255,19 +255,16 @@ object LayoutOps {
     * leaves behind. Fresh per-call dir like every layout write. */
   def fragmentedLineitem(t: Tables, files: Int = 64): String = {
     val dir = freshLayoutDir()
-    // hash-scatter on the key rather than round-robin (round-18): a
-    // keyless repartition(n) pays a local sort of its whole input first
+    // hash-scatter on the key rather than round-robin: a keyless
+    // repartition(n) pays a local sort of its whole input first
     // (spark.sql.execution.sortBeforeRepartition, needed so task retries
     // reproduce the row→partition map); hashing l_orderkey is
     // deterministic without the sort and leaves the same shape — `files`
     // hash-scattered fragments. Which rows land in which fragment is not
     // part of any contract: every consumer (the compaction gates, the
     // specs) treats the dir as an unordered row bag.
-    val frag =
-      if (sys.env.get("SPARK_GRAFT_FRAG_HASH").contains("off"))
-        t.lineitem.repartition(files) // pre-round-18 shape, for A/B
-      else t.lineitem.repartition(files, col("l_orderkey"))
-    frag.write.mode("overwrite").parquet(dir)
+    t.lineitem.repartition(files, col("l_orderkey"))
+      .write.mode("overwrite").parquet(dir)
     dir
   }
 

@@ -425,7 +425,7 @@ object SimilarityOps {
     * and without the cache every batch would re-read the O(nlist)
     * centroid parquet and — above the hier threshold — re-run the
     * driver-side Lloyd quantizer (~1 s at 16384 cells, the exact
-    * per-pass cost the round-14 AssignBench advice flagged). Centroids
+    * per-pass cost a standalone assignment benchmark measured). Centroids
     * are FROZEN between rebuilds by the append contract, and a rebuild
     * rewrites the centroids dir, which moves the generation stamp and
     * evicts the stale plan.

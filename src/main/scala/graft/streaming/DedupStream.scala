@@ -57,24 +57,21 @@ object DedupStream {
       docSchemaCache, dir, "documents.parquet")(
       spark.read.parquet(s"$dir/documents.parquet").schema)
 
-  /** The round-17 conditional scan rebalance ([[graft.core.Tables]]
-    * `balancedByKey`), applied to the STREAMING documents source
-    * (round-18): a parquet file splits no finer than its row groups, so
+  /** The conditional scan rebalance ([[graft.core.Tables]]
+    * `balancedByKey`), applied to the STREAMING documents source: a parquet file splits no finer than its row groups, so
     * the per-doc shingle pass of [[DedupOps.bandedDocs]] otherwise runs
     * on ≤ rowGroups tasks inside each micro-batch (AQE is disabled for
     * stateful workloads, so nothing re-spreads it later — the banding
     * pipeline's own `repartition(doc_id)` only parallelizes the
     * signature stage, not the shingling below it). Same contract as the
     * batch seam: fires ONLY when the footer row-group count is below the
-    * session's cores — on production layouts no exchange is added — and
-    * `SPARK_GRAFT_SCAN_REBALANCE=off` is the shared kill switch.
+    * session's cores — on production layouts no exchange is added.
     * Partitioning never affects the emitted pair set (state keys on band
     * content; pairs are order-canonicalized and deduped).
     */
   private def rebalancedDocs(spark: SparkSession, dir: String,
                              docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_SCAN_REBALANCE").contains("off")) return docs
     val par = spark.sparkContext.defaultParallelism
     if (graft.core.Tables(spark, dir).scanUnits("documents") >= par) docs
     else docs.repartition(par, col("doc_id"))

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 
 /** Scale-adaptive shuffle/state partitioning for the bounded streaming
-  * gates (round-17 optimization; guide §2 "make partitioning
+  * gates (guide §2 "make partitioning
   * scale-adaptive — derive from input size — rather than a constant tuned
   * for either local mode or the cluster").
   *
@@ -23,8 +23,7 @@ import org.apache.spark.sql.SparkSession
   * where the conf is already sized to the cluster and the state volume —
   * is NEVER re-tuned upward or downward beyond its own setting: with
   * input >> partitions x 16 MB the derived value hits the cap and the
-  * wrapper is a no-op. `SPARK_GRAFT_STREAM_SHUFFLE` pins the value for
-  * A/B runs.
+  * wrapper is a no-op.
   *
   * Results are partitioning-independent: watermark math, stateful
   * aggregation, dedup and join semantics key on row content, never on
@@ -54,20 +53,8 @@ object StreamTuning {
 
   private[streaming] def statePartitions(spark: SparkSession, bytes: Long): Int = {
     val configured = spark.sessionState.conf.numShufflePartitions
-    // validated parse (round-18 advice): a malformed or non-positive
-    // override must fail HERE with a clear message, not as a
-    // NumberFormatException deep inside a gate or an invalid
-    // spark.sql.shuffle.partitions setting — the env var is an A/B pin,
-    // and a typo silently ignored would invalidate the A/B.
-    sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE").map { raw =>
-      val v = raw.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
-        s"SPARK_GRAFT_STREAM_SHUFFLE must be an integer, got '$raw'"))
-      require(v >= 1, s"SPARK_GRAFT_STREAM_SHUFFLE must be >= 1, got $v")
-      v
-    }.getOrElse {
-      val derived = math.max(4L, (bytes + bytesPerPartition - 1) / bytesPerPartition)
-      math.min(configured.toLong, derived).toInt
-    }
+    val derived = math.max(4L, (bytes + bytesPerPartition - 1) / bytesPerPartition)
+    math.min(configured.toLong, derived).toInt
   }
 
   /** Run `body` (stream start + synchronous drain) with

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `explain("formatted")` for named [[graft.SparkEntry.queries]]
   * entries to one text file per query — the before/after plan evidence
   * behind the optimization-round notes (plans/r17/). Usage:
@@ -13,9 +11,8 @@ import org.apache.spark.sql.SparkSession
   * costs milliseconds inside the gates' timed drains, which the bench
   * must not pay).
   *
-  * Each query lands at `<outDir>/<name>_<suffix>.txt`. The session mirrors
-  * Bench's (extensions, UTC, ANSI off, shuffle partitions = cores) so the
-  * dumped plan is the one the bench times, not a differently-configured
+  * Each query lands at `<outDir>/<name>_<suffix>.txt`. The session is
+  * Bench's ([[graft.Session.local]]) so the dumped plan is the one the bench times, not a differently-configured
   * twin. Queries whose construction runs driver-side gates (ML verdicts,
   * graph loops) execute those untimed — this tool documents plan shape,
   * not wall time.
@@ -27,15 +24,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local(graft.Session.envCpus.getOrElse(32)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>

@@ -222,10 +222,9 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("scan rebalance is a NO-OP on a layout with row groups >= session cores") {
-    // round-18 verdict item 4: the production no-op contract of
-    // Tables.balancedByKey was bench-proven (kill-switch dumps) but not
-    // spec-pinned. A documents layout with >= defaultParallelism row
-    // groups (here: one file per core, 1 row group each) must plan the
+    // the production no-op contract of Tables.balancedByKey: a documents
+    // layout with >= defaultParallelism row groups (here: one file per
+    // core, 1 row group each) must plan the
     // balanced accessor WITHOUT any exchange — at 100 TB the condition is
     // false and no corpus bytes may cross an added shuffle.
     val par = spark.sparkContext.defaultParallelism
@@ -239,6 +238,22 @@ class PlanShapeSpec extends SparkTestBase {
       val p = plan(tt.documentsBalanced)
       assert(!p.contains("Exchange"),
         s"balancedByKey added an exchange on a >=cores layout:\n$p")
+      // both sides of the condition give the same output: the 1-row-group
+      // fixture (rebalance fires) and its >=cores rewrite (no-op)
+      assert(t.scanUnits("documents") < par,
+        "fixture expectation: sf0.001 documents ships fewer row groups than cores")
+      def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+        df.collect().map(_.toString).toSeq.sorted
+      val batch = rows(DedupOps.minhashDupPairs(t, 0.3))
+      assert(batch.nonEmpty, "fixture expectation: sf0.001 has minhash pairs")
+      assert(rows(DedupOps.minhashDupPairs(tt, 0.3)) == batch,
+        "minhashDupPairs differs between the two layouts")
+      def streamed(d: String): Seq[String] = rows(graft.streaming.DedupStream
+        .minhashPairs(spark, d, s"spec_rebalance_${System.nanoTime()}", 0.3))
+      val fired = streamed("/root/testdata/sf0.001")
+      assert(fired.nonEmpty, "fixture expectation: sf0.001 has streamed pairs")
+      assert(streamed(dir) == fired,
+        "DedupStream.minhashPairs differs between the two layouts")
     } finally graft.core.Tables.deleteRecursively(dir)
   }
 

@@ -204,4 +204,14 @@ class GraphOpsSpec extends SparkTestBase {
     val full = GraphOps.pagerankTop(t, iters = 2, k = Int.MaxValue)
     assert(full.count() == n, "one rank row per node after every iteration")
   }
+
+  test("observedRow falls back to the recomputed row when the observation fails") {
+    val failed = scala.concurrent.Future.failed[org.apache.spark.sql.Row](
+      new IllegalStateException("listener bus dropped the metrics event"))
+    var recomputed = 0
+    val row = GraphOps.observedRow("spec_failed", failed,
+      { recomputed += 1; org.apache.spark.sql.Row(7L) })
+    assert(row.getLong(0) == 7L)
+    assert(recomputed == 1, "the fallback must run exactly once")
+  }
 }
