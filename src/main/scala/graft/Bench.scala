@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.Tables
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every SparkEntry query against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line with per-query seconds.
@@ -260,20 +260,11 @@ object Bench {
     val mlModels = Seq("LinearRegression", "DecisionTree", "RandomForest")
       .filter(m => only.forall(_(s"ml_fit_$m")))
     val mlResults = if (mlModels.isEmpty) Seq.empty
-    else {
-      val t = Tables(spark, sfDir)
-      // cached + materialized outside the timings, size-aware partitioning
-      val feat = graft.ml.PricePipeline.featurizedCached(t)
-      try {
-        val Array(train, test) = feat.randomSplit(Array(0.8, 0.2), seed = 42)
-        mlModels.map { m =>
-          val reg = graft.ml.PricePipeline.regressors.toMap.apply(m)
-          s"ml_fit_$m" -> timed(s"ml_fit_$m") {
-            graft.ml.PricePipeline.fitEval(m, reg, train, test)
-            ()
-          }
-        }
-      } finally { feat.unpersist(); () }
+    else withFitSplit(spark, sfDir) { (train, test) =>
+      mlModels.map { m =>
+        val fit = fitBody(m, train, test)
+        s"ml_fit_$m" -> timed(s"ml_fit_$m")(fit())
+      }
     }
 
     // sf1 headline leg (round-10): when benching the driver's sf0.1
@@ -347,21 +338,17 @@ object Bench {
           }
           // the ml_fit rows share one cached feature frame per pass,
           // built untimed — the suite rows' exact setup shape
-          val feat = graft.ml.PricePipeline.featurizedCached(Tables(spark, sf1Dir))
-          val rows =
-            try {
-              val Array(train, test) = feat.randomSplit(Array(0.8, 0.2), seed = 42)
-              headline.map { n =>
-                if (SparkEntry.queries.contains(n)) time(n)(queryBody(n)())
-                else if (n == "sample_loading")
-                  time(n)(sampleLoadingPhase(spark, sf1Csv))
-                else {
-                  val m = n.stripPrefix("ml_fit_")
-                  val reg = graft.ml.PricePipeline.regressors.toMap.apply(m)
-                  time(n) { graft.ml.PricePipeline.fitEval(m, reg, train, test); () }
-                }
+          val rows = withFitSplit(spark, sf1Dir) { (train, test) =>
+            headline.map { n =>
+              if (SparkEntry.queries.contains(n)) time(n)(queryBody(n)())
+              else if (n == "sample_loading")
+                time(n)(sampleLoadingPhase(spark, sf1Csv))
+              else {
+                val fit = fitBody(n.stripPrefix("ml_fit_"), train, test)
+                time(n)(fit())
               }
-            } finally { feat.unpersist(); () }
+            }
+          }
           val post = legProbe()
           LegPass(rows, runs.toSeq, pre.rounded, post.rounded,
             sf1CpuSlice(), sf1GcSlice())
@@ -384,16 +371,9 @@ object Bench {
             if (SparkEntry.queries.contains(n)) timedBoth(s"sf1:$n")(queryBody(n)())
             else if (n == "sample_loading")
               timedBoth(s"sf1:$n")(sampleLoadingPhase(spark, sf1Csv))
-            else {
-              val m = n.stripPrefix("ml_fit_")
-              val reg = graft.ml.PricePipeline.regressors.toMap.apply(m)
-              val feat = graft.ml.PricePipeline.featurizedCached(Tables(spark, sf1Dir))
-              try {
-                val Array(train, test) = feat.randomSplit(Array(0.8, 0.2), seed = 42)
-                timedBoth(s"sf1:$n") {
-                  graft.ml.PricePipeline.fitEval(m, reg, train, test); ()
-                }
-              } finally { feat.unpersist(); () }
+            else withFitSplit(spark, sf1Dir) { (train, test) =>
+              val fit = fitBody(n.stripPrefix("ml_fit_"), train, test)
+              timedBoth(s"sf1:$n")(fit())
             }
           queryCpu.get(s"sf1:$n").foreach(remCpu(n) = _)
           queryGc.get(s"sf1:$n").foreach(remGc(n) = _)
@@ -550,6 +530,30 @@ object Bench {
     require(estMb >= 0)
     df.sample(withReplacement = false, 0.1, seed = 42)
       .write.format("noop").mode("overwrite").save()
+  }
+
+  /** Runs `body` over the seeded 80/20 split of one cached feature frame
+    * of `dir` — the untimed setup every ml_fit row shares (featurized,
+    * cached and materialized outside the timings, size-aware
+    * partitioning).
+    */
+  private def withFitSplit[T](spark: SparkSession, dir: String)
+                             (body: (DataFrame, DataFrame) => T): T = {
+    val feat = graft.ml.PricePipeline.featurizedCached(Tables(spark, dir))
+    try {
+      val Array(train, test) = feat.randomSplit(Array(0.8, 0.2), seed = 42)
+      body(train, test)
+    } finally { feat.unpersist(); () }
+  }
+
+  /** The timed body of an ml_fit row: fit + evaluate the reference
+    * regressor named `model`. The estimator is resolved here, outside
+    * the returned closure, so the timing covers the fit alone.
+    */
+  private def fitBody(model: String, train: DataFrame,
+                      test: DataFrame): () => Unit = {
+    val reg = graft.ml.PricePipeline.regressors.toMap.apply(model)
+    () => { graft.ml.PricePipeline.fitEval(model, reg, train, test); () }
   }
 
   /** Archived quiet-leg MEDIANS for the sf1 headline rows — the 3×-trip
