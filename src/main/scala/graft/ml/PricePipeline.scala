@@ -217,9 +217,9 @@ object PricePipeline {
                 sc.setLocalProperty("spark.scheduler.pool", s"graft_fit_$n")
                 try {
                   val t0 = System.nanoTime()
-                  // FMRegressor is the table's compute whale —
-                  // minibatch GD runs ~100 full gradient passes over the
-                  // train split, so its cost is compute × passes, unlike
+                  // FMRegressor is the table's compute whale — minibatch
+                  // GD runs ~100 full gradient passes over the train
+                  // split, so its cost is compute × passes, unlike
                   // the scheduling-bound L-BFGS/tree fits the shared
                   // frame's iteration-friendly grain (rows >> 15
                   // partitions; featurizedCached doc) is sized for. When

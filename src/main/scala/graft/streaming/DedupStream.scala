@@ -58,9 +58,10 @@ object DedupStream {
       spark.read.parquet(s"$dir/documents.parquet").schema)
 
   /** The conditional scan rebalance ([[graft.core.Tables]]
-    * `balancedByKey`), applied to the STREAMING documents source: a parquet file splits no finer than its row groups, so
-    * the per-doc shingle pass of [[DedupOps.bandedDocs]] otherwise runs
-    * on ≤ rowGroups tasks inside each micro-batch (AQE is disabled for
+    * `balancedByKey`), applied to the STREAMING documents source: a
+    * parquet file splits no finer than its row groups, so the per-doc
+    * shingle pass of [[DedupOps.bandedDocs]] otherwise runs on
+    * ≤ rowGroups tasks inside each micro-batch (AQE is disabled for
     * stateful workloads, so nothing re-spreads it later — the banding
     * pipeline's own `repartition(doc_id)` only parallelizes the
     * signature stage, not the shingling below it). Same contract as the

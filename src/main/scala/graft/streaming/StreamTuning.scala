@@ -3,9 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 
 /** Scale-adaptive shuffle/state partitioning for the bounded streaming
-  * gates (guide §2 "make partitioning
-  * scale-adaptive — derive from input size — rather than a constant tuned
-  * for either local mode or the cluster").
+  * gates (guide §2 "make partitioning scale-adaptive — derive from input
+  * size — rather than a constant tuned for either local mode or the
+  * cluster").
   *
   * A Structured Streaming stateful operator instantiates one state store
   * per shuffle partition per operator, and every micro-batch pays a
