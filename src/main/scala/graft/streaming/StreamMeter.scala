@@ -70,8 +70,8 @@ object StreamMeter {
 
   def lastPlan(gate: String): Option[String] = plans.get(gate)
 
-  /** Plan capture is opt-in (`SPARK_GRAFT_STREAM_PLAN=1`, set by the
-    * PlanDump tool): rendering a complex micro-batch plan costs real
+  /** Plan capture is opt-in (`SPARK_GRAFT_STREAM_PLAN=1`, set when
+    * running the PlanDump tool): rendering a complex micro-batch plan costs real
     * milliseconds inside the gates' timed drain, and the bench must not
     * pay for evidence it isn't collecting (measured ~0.3–0.6 s on the
     * banded flatMapGroupsWithState gates).
