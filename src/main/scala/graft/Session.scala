@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local-session recipe every driver main and the test suite
+/** The one local-session recipe every main and the test suite
   * share, so a plan dumped, a gate verified and a row benched all run
   * under the same settings:
   *

@@ -250,7 +250,7 @@ class PlanShapeSpec extends SparkTestBase {
         "minhashDupPairs differs between the two layouts")
       def streamed(d: String): Seq[String] = rows(graft.streaming.DedupStream
         .minhashPairs(spark, d, s"spec_rebalance_${System.nanoTime()}", 0.3))
-      val fired = streamed("/root/testdata/sf0.001")
+      val fired = streamed(t.dir)
       assert(fired.nonEmpty, "fixture expectation: sf0.001 has streamed pairs")
       assert(streamed(dir) == fired,
         "DedupStream.minhashPairs differs between the two layouts")
