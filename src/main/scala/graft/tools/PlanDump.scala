@@ -12,8 +12,8 @@ package graft.tools
   * must not pay).
   *
   * Each query lands at `<outDir>/<name>_<suffix>.txt`. The session is
-  * Bench's ([[graft.Session.local]]) so the dumped plan is the one the bench times, not a differently-configured
-  * twin. Queries whose construction runs driver-side gates (ML verdicts,
+  * Bench's ([[graft.Session.local]]) so the dumped plan is the one the
+  * bench times, not a differently-configured twin. Queries whose construction runs driver-side gates (ML verdicts,
   * graph loops) execute those untimed — this tool documents plan shape,
   * not wall time.
   */
